@@ -437,15 +437,18 @@ object BdbDataGen {
   /** Write every table as dataGen-style pipe-CSV under
     * `<csvBase>/<table>/`. No field ever contains '|', '"' or a
     * newline, so the unquoted format round-trips exactly through
-    * BdbCatalog's quote-less readers.
+    * BdbCatalog's quote-less readers. Tables are written concurrently,
+    * as the load test converts them ([[BdbCatalog.eachTable]]).
     */
   def writeCsv(spark: SparkSession, csvBase: String, c: Counts,
-      clickSkew: Double = 1.0): Unit =
-    frames(spark, c, clickSkew).foreach { case (t, df) =>
-      df.write.mode("overwrite")
+      clickSkew: Double = 1.0): Unit = {
+    val dfs = frames(spark, c, clickSkew)
+    BdbCatalog.eachTable(spark, "writeCsv", dfs.keys.toSeq.sorted) { t =>
+      dfs(t).write.mode("overwrite")
         .option("sep", "|").option("quote", "")
         .csv(s"$csvBase/$t")
     }
+  }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,

@@ -151,7 +151,7 @@ object Dedup {
     val pruned =
       if (minJaccardPct <= 0) candidates
       else {
-        val sizes = harr.select(col(id), size(col("hs")).as("n"))
+        val sizes = harr.select(col(id), size(col("hs")).cast("long").as("n"))
         candidates
           .join(sizes.as("pa"), col("id_1") === col(s"pa.$id"))
           .join(sizes.as("pb"), col("id_2") === col(s"pb.$id"))
@@ -165,16 +165,15 @@ object Dedup {
       .select(col("id_1"), col("id_2"),
         intersect_count_sorted(col("za.hs"), col("zb.hs")).as("n_common"),
         size(col("za.hs")).as("na"), size(col("zb.hs")).as("nb"))
-    thresholded(counted, col("na") + col("nb") - col("n_common"),
-      thresholdPct)
+    thresholded(counted, col("na"), col("nb"), thresholdPct)
       .select(col("id_1"), col("id_2"),
         (col("n_common").cast("double") /
           (col("na") + col("nb") - col("n_common"))).as("jaccard"))
   }
 
   /** EXACT integer form of the caller-side `jaccard >= pct/100`
-    * filter: `100 * n_common >= pct * union` over the pre-division
-    * integer columns, so the hot per-pair compare stays in
+    * filter: `100 * n_common >= pct * (na + nb - n_common)` over the
+    * pre-division integer columns, so the hot per-pair compare stays in
     * whole-stage-codegen long space and (when the caller then drops
     * the jaccard column, as dupEdges does) the double division is
     * never evaluated at all. Row-set equivalence to the double
@@ -185,11 +184,16 @@ object Dedup {
     * any document's shingle-set size (DedupSpec proves the boundary
     * cases). `thresholdPct = 0` keeps the unfiltered contract.
     */
-  private def thresholded(counted: DataFrame, union: Column,
-      thresholdPct: Int): DataFrame =
+  private[graft] def thresholded(counted: DataFrame, na: Column,
+      nb: Column, thresholdPct: Int): DataFrame =
     if (thresholdPct <= 0) counted
-    else counted.filter(
-      col("n_common") * 100 >= union * thresholdPct)
+    else {
+      // widened before the * 100: int counts from 2^31/100 up would
+      // ANSI-overflow
+      val common = col("n_common").cast("long")
+      counted.filter(common * 100 >=
+        (na.cast("long") + nb.cast("long") - common) * thresholdPct)
+    }
 
   /** Word n-grams WITH multiplicity (one row per occurrence) — the
     * input for repetition analysis, where how often the top n-gram
@@ -484,8 +488,7 @@ object Dedup {
     val counted = commonCountsFromBuckets(shingles, id, maxDf)
       .join(sizes.as("za"), col("id_1") === col(s"za.$id"))
       .join(sizes.as("zb"), col("id_2") === col(s"zb.$id"))
-    thresholded(counted, col("za.n") + col("zb.n") - col("n_common"),
-      thresholdPct)
+    thresholded(counted, col("za.n"), col("zb.n"), thresholdPct)
       .select(col("id_1"), col("id_2"),
         (col("n_common").cast("double") /
           (col("za.n") + col("zb.n") - col("n_common"))).as("jaccard"))
@@ -510,8 +513,8 @@ object Dedup {
     // integer-space equivalence, applied to the smaller set size
     val filtered =
       if (minMaxContainmentPct <= 0) counted
-      else counted.filter(col("n_common") * 100 >=
-        least(col("za.n"), col("zb.n")) * minMaxContainmentPct)
+      else counted.filter(col("n_common").cast("long") * 100 >=
+        least(col("za.n"), col("zb.n")).cast("long") * minMaxContainmentPct)
     filtered
       .select(col("id_1"), col("id_2"), col("n_common"),
         (col("n_common").cast("double") / col("za.n")).as("c_1in2"),

@@ -205,7 +205,8 @@ object MlQueries extends Suite {
     // the per-(doc, class) score completion below needs it and this
     // is the scan the docs already come from — no extra pass
     val ted = base.filter(isTest).select(col("doc_id"), col("lang"),
-      size(Text.tokens(col("text"))).cast("long").as("ntok"))
+      coalesce(size(Text.tokens(col("text"))), lit(0)).cast("long")
+        .as("ntok"))
     // carry lang through the explode: the per-word class label comes
     // straight off the document row, not from a token-stream join
     // back to trd/ted (two exchanges saved)

@@ -1,6 +1,12 @@
 package graft
 
-import graft.bdb.BdbBenchmarkRunner
+import java.io.File
+
+import scala.jdk.CollectionConverters._
+
+import graft.bdb.{BdbBenchmarkRunner, BdbCatalog, BdbDataGen, BdbSchemas}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** End-to-end drive of the E3 benchmark runner: fixture tables written
   * to the reference parquet layout (basePath/table dir), catalog
@@ -13,27 +19,78 @@ import graft.bdb.BdbBenchmarkRunner
   */
 class BdbRunnerSpec extends SparkSpec {
 
+  /** Job-group ids of the jobs started while `body` runs. The listener
+    * bus is asynchronous: a sentinel job run after `body` is the last
+    * event, so once it arrives every earlier job start has too.
+    */
+  private def jobGroupsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup("sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!groups.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    groups.asScala.toSeq.filterNot(_ == "sentinel")
+  }
+
   test("loadTest converts pipe-CSV to parquet with schemas intact") {
     val base = "/root/repo/target/graft-tmp/bdb-csv"
     val out = "/root/repo/target/graft-tmp/bdb-parquet-lt"
-    // write the fixture as dataGen-style pipe CSV (no quoting)
+    // dataGen-style pipe CSV (no quoting) of the fixture tables
+    BdbDataGen.writeCsv(spark, base, BdbDataGen.Counts(0.0))
     val frames = BdbFixture.frames(spark)
-    frames.foreach { case (t, df) =>
-      df.write.mode("overwrite")
-        .option("sep", "|").option("quote", "")
-        .csv(s"$base/$t")
+    var report: Seq[(String, Long, Double)] = Nil
+    val groups = jobGroupsOf {
+      spark.sparkContext.setJobGroup("bdb-load-test", "load test")
+      try report = BdbCatalog.loadTest(spark, base, out)
+      finally spark.sparkContext.clearJobGroup()
     }
-    val report = graft.bdb.BdbCatalog.loadTest(spark, base, out)
-    assert(report.size === 23)
+    assert(report.map(_._1) === BdbSchemas.tables)
     report.foreach { case (t, n, secs) =>
       assert(n === frames(t).count(), s"$t row count drifted")
       assert(secs >= 0)
     }
+    // the write is each table's only job, and the pool threads carried
+    // the caller's group, so cancelJobGroup reaches every one
+    assert(groups.size === BdbSchemas.tables.size, s"jobs: $groups")
+    assert(groups.forall(_ == "bdb-load-test"), s"jobs: $groups")
     // converted layout must be queryable end-to-end
-    graft.bdb.BdbCatalog.registerParquet(spark, out)
+    BdbCatalog.registerParquet(spark, out)
     val q01 = graft.bdb.BdbQueries1
       .q01(spark, stores = Seq(1, 2, 3, 4, 5), minCount = 0).count()
     assert(q01 > 0)
+  }
+
+  test("loadTest names a table whose CSV is missing, after converting " +
+    "the rest, and leaves no pool thread behind") {
+    val dir = java.nio.file.Files.createTempDirectory("bdb-missing").toString
+    val (base, out) = (s"$dir/csv", s"$dir/parquet")
+    BdbDataGen.writeCsv(spark, base, BdbDataGen.Counts(0.0))
+    val missing = BdbSchemas.tables.head
+    FileUtils.deleteDirectory(new File(s"$base/$missing"))
+    val e = intercept[RuntimeException] {
+      BdbCatalog.loadTest(spark, base, out)
+    }
+    assert(e.getMessage.contains(missing), e.getMessage)
+    // the first table failed, yet every other one was written
+    BdbSchemas.tables.tail.foreach { t =>
+      assert(new File(s"$out/$t/_SUCCESS").exists(), s"$t not converted")
+    }
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("graft-bdb-table-"))
+    assert(alive.isEmpty, s"pool threads still alive: $alive")
+    FileUtils.deleteDirectory(new File(dir))
   }
 
   test("BdbBenchmarkRunner times all 30 queries from a parquet layout") {

@@ -298,6 +298,29 @@ class DedupSpec extends SparkSpec {
         .filter(greatest(col("c_1in2"), col("c_2in1")) >= 0.51)))
   }
 
+  test("integer thresholds hold for int counts of 2^31/100 and up") {
+    // int columns, as intersect_count_sorted and size() produce them:
+    // 100 * n_common or pct * |set| in int space would ANSI-overflow
+    val counted = Seq((1L, 2L, 27000000, 30000000, 30000000),
+        (3L, 4L, 21474837, 21474837, 30000000))
+      .toDF("id_1", "id_2", "n_common", "na", "nb")
+    def kept(p: Int) = Dedup.thresholded(counted, col("na"), col("nb"), p)
+      .select("id_1").as[Long].collect().toSet
+    // jaccard 27/33 = 0.818 and 21474837/30000000 = 0.716
+    assert(kept(71) === Set(1L, 3L))
+    assert(kept(72) === Set(1L))
+    assert(kept(82) === Set.empty[Long])
+    // containment over int sizes of 30M: 90 * 30M is past Int.MaxValue
+    val sh = Dedup.wordShingles(
+      Seq((1L, "s0 s1"), (2L, "s0 s1")).toDF("doc_id", "text"),
+      "doc_id", "text")
+    val sizes = Some(Seq((1L, 30000000), (2L, 30000000)).toDF("doc_id", "n"))
+    assert(Dedup.containmentAllPairs(sh, "doc_id", sizesNarrow = sizes)
+      .count() === 1L)
+    assert(Dedup.containmentAllPairs(sh, "doc_id", sizesNarrow = sizes,
+      minMaxContainmentPct = 90).count() === 0L)
+  }
+
   test("d12 pipeline: depth-9 near-dup chain resolves to ONE group " +
     "(past min-label propagation's diameter-5 bound)") {
     import org.apache.spark.sql.functions._

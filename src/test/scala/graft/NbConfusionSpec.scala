@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * the arithmetic completion wsum = msum + (ntok - mcnt) * def_ppm.
   * This spec pins the completion identity against the OLD per-token
   * formulation on a corpus built to hit the edges the rewrite could
-  * break: an EMPTY test document (ntok = 0 — must score prior-only),
+  * break: an EMPTY and a NULL-text test document (ntok = 0 — both
+  * must score prior-only),
   * a test document whose true lang is UNSEEN in training (scores
   * only over the trained class list), a document with every word
   * unseen (pure def_ppm path), and multi-class word overlap.
@@ -29,7 +30,9 @@ class NbConfusionSpec extends SparkSpec {
       (10L, "", "aa", "s1"),                       // EMPTY test doc
       (20L, "apple egg zebra", "zz", "s3"),        // UNSEEN true lang
       (30L, "zebra yak xylo", "bb", "s2"),         // every word unseen
-      (40L, "banana fig", "aa", "s1"))             // cross-class words
+      (5L, "grape egg", "bb", "s2"),               // bb prior > aa prior
+      (40L, "banana fig", "aa", "s1"),             // cross-class words
+      (50L, null, "nn", "s4"))                     // NULL text test doc
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .coalesce(1).write.mode("overwrite")
@@ -93,7 +96,11 @@ class NbConfusionSpec extends SparkSpec {
     // lang appears (scored over trained classes), and the empty doc
     // contributes one prior-only prediction
     assert(engine.exists(_._1 == "zz"), s"unseen-class row missing: $engine")
-    assert(engine.toSeq.map(_._3).sum === 4L,
-      s"4 test docs expected: $engine")
+    assert(engine.toSeq.map(_._3).sum === 5L,
+      s"5 test docs expected: $engine")
+    // NULL text has no tokens: it scores on priors only, so it takes
+    // the class with the larger prior (bb: 3 of 5 train docs)
+    assert(engine.filter(_._1 == "nn") === Set(("nn", "bb", 1L)),
+      s"NULL-text doc not prior-only: $engine")
   }
 }
